@@ -30,7 +30,7 @@ Physical plan, deliberately:
     2. target read pruned to those buckets      (file skipping — O(batch),
                                                  not O(table))
     3. union(target-subset, source) → window by key ordered by (offset
-       desc, seq desc, is_target desc) → rank 1 — within-batch LWW
+       desc, seq desc, target wins ties) → rank 1 — within-batch LWW
        dedup, the cross-batch guard, and the target tie-break in ONE
        window; Spark 4's WindowGroupLimit runs a map-side partial top-1
        so at most one candidate row per key per input partition crosses
@@ -68,11 +68,13 @@ from pyspark.sql import types as T
 from binlog_es_go_spark.lake.table import (
     BUCKET_COL,
     DELETED_COL,
+    GUARD_TIE_COL,
     KHASH_COL,
     CommitConflict,
     LakeTable,
     align_to_schema,
     bucket_expr,
+    keep_guard_winners,
     khash_expr,
     merge_schemas,
 )
@@ -260,10 +262,10 @@ def _merge_once(
     ]
 
     # Within-batch dedup is FUSED into the merge window below (one wide
-    # shuffle total): the window's (offset desc, seq desc, is_target desc)
-    # ordering resolves batch-internal LWW and the cross-batch guard in a
-    # single rank. A separate dedup pass would shuffle the full content
-    # twice for nothing.
+    # shuffle total): the window's GUARD_ORDER_SQL (offset desc, seq
+    # desc, target wins ties) resolves batch-internal LWW and the
+    # cross-batch guard in a single rank. A separate dedup pass would
+    # shuffle the full content twice for nothing.
     src = source.withColumn(BUCKET_COL, bucket_expr(key_cols, snap.n_buckets))
 
     # Affected-bucket discovery: at most n_buckets ints — a safe collect.
@@ -334,7 +336,7 @@ def _merge_once(
 
     src_norm = _normalize_source(
         src, key_cols, payload_cols, offset_col, op_col, seq_col, ts_col,
-        extra_exprs=[f"`{BUCKET_COL}`", "0 AS _is_target"],
+        extra_exprs=[f"`{BUCKET_COL}`", f"0 AS {GUARD_TIE_COL}"],
     )
 
     # Tombstones included: they hold the offset guard for their key.
@@ -355,7 +357,7 @@ def _merge_once(
     target = align_to_schema(target, new_schema)
     tgt_norm = (
         target.withColumn(BUCKET_COL, bucket_expr(key_cols, snap.n_buckets))
-        .withColumn("_is_target", F.lit(1))
+        .withColumn(GUARD_TIE_COL, F.lit(1))
     )
 
     combined = align_union(src_norm, tgt_norm, new_schema)
@@ -437,27 +439,12 @@ def _merge_once(
     # explodes into n_tasks*n_buckets files, also 3x slower — BENCH.md
     # round-3 table.)
     wg = F.floor(F.col(KHASH_COL) / F.lit(span)).cast("int")
-    order = [
-        F.col("last_offset").desc_nulls_last(),
-        F.coalesce(F.col("last_seq"), F.lit(0)).desc(),
-        F.col("_is_target").desc(),
-    ]
     if small:
         combined = combined.withColumn(KHASH_COL, khash_expr(key_cols)).withColumn("_wg", wg)
         combined = combined.repartition(n_tasks, F.col(BUCKET_COL), F.col("_wg"))
-        w = Window.partitionBy(BUCKET_COL, "_wg", *key_cols).orderBy(*order)
-        winners = (
-            combined.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_is_target", "_wg")
-        )
+        winners = keep_guard_winners(combined, [BUCKET_COL, "_wg", *key_cols]).drop("_wg")
     else:
-        w = Window.partitionBy(*key_cols).orderBy(*order)
-        winners = (
-            combined.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_is_target")
-        )
+        winners = keep_guard_winners(combined, key_cols)
         winners = winners.withColumn(KHASH_COL, khash_expr(key_cols))
         winners = winners.repartition(n_tasks, F.col(BUCKET_COL), wg)
 
@@ -614,7 +601,7 @@ def merge_into_delta(
 
 
 def align_union(a: DataFrame, b: DataFrame, schema: T.StructType) -> DataFrame:
-    extras = [BUCKET_COL, "_is_target"]
+    extras = [BUCKET_COL, GUARD_TIE_COL]
 
     def proj(df: DataFrame) -> DataFrame:
         # SQL expression strings, one selectExpr call: Column objects cost

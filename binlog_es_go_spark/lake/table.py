@@ -56,6 +56,15 @@ KHASH_COL = "_khash"
 DELETED_COL = "_deleted"
 # Unit separator: never appears in keys, so concat_ws is injective.
 KEY_SEP = "\x1f"
+# The guard order that picks one row among several versions of a key —
+# the merge window, merge-on-read resolution and point lookups all rank by
+# it: max (last_offset, last_seq) wins, and a FULL tie goes to the row
+# tagged GUARD_TIE_COL = 1, the table's committed copy (the target side of
+# a merge, base files against pending deltas). That tie-break is the
+# strict "(offset, seq) >" guard of the sequential oracle (cdc/oracle.py):
+# a replayed event, or a delta row already folded into base, never wins.
+GUARD_TIE_COL = "_is_base"
+GUARD_ORDER_SQL = f"last_offset DESC NULLS LAST, coalesce(last_seq, 0) DESC, {GUARD_TIE_COL} DESC"
 
 
 class CommitConflict(Exception):
@@ -77,10 +86,11 @@ def khash_expr(key_cols: list[str]):
     as a PRUNING hint, never an identity: the file-granular COW in
     merge.py rewrites any file whose range contains a batch key's hash —
     an equal hash is always in-range, so a colliding resident key forces
-    a rewrite (extra IO), never an unsafe carry; ``read_keys`` and the
-    merge window re-filter/re-group by the REAL key columns after the
-    hash-pruned scan. Net effect of a collision is a marginally wider
-    scan/rewrite set — correctness is unaffected.
+    a rewrite (extra IO), never an unsafe carry; ``read_keys`` ANDs its
+    ``_khash IN (...)`` scan predicate with an exact test on the REAL key
+    columns, and the merge window groups by them. Net effect of a
+    collision is a marginally wider scan/rewrite set — correctness is
+    unaffected.
     """
     key = F.concat_ws(KEY_SEP, *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in key_cols])
     return F.crc32(key)
@@ -669,12 +679,25 @@ class LakeTable:
         O(len(keys)) files no matter how large the table is. Values are
         stringified exactly as Spark casts them (exact for string and
         integer key columns — the supported key types).
+
+        One snapshot serves the whole lookup. The key predicate — ``_khash
+        IS NULL OR _khash IN (<hashes>)`` (pushed into the parquet scans;
+        the null branch keeps files written before ``_khash`` existed)
+        AND an exact test on the joined key — filters the base and the
+        pending-delta scans BEFORE resolution, so at most ``len(keys) x
+        (1 + pending deltas)`` rows survive. They are coalesced into one
+        partition and resolved by the guard window there: one Spark job,
+        no exchange. Unlike :func:`resolve_merge_on_read`, whose input is
+        unbounded, this shape relies on the key list bounding the rows.
+        Predicates and window are SQL strings: a Column-object plan cost
+        ~2x the driver-side planning time per lookup.
         """
+        import bisect
         import zlib
 
         snap = self.snapshot(version)
         if not keys:
-            return self.read(files=[], version=version)
+            return self.read(files=[], version=snap.version)
         want: list[tuple[int, int, str]] = []  # (bucket, khash, joined)
         for kt in keys:
             vals = kt if isinstance(kt, (tuple, list)) else (kt,)
@@ -683,8 +706,6 @@ class LakeTable:
             joined = KEY_SEP.join("" if v is None else str(v) for v in vals)
             kh = zlib.crc32(joined.encode("utf-8"))
             want.append((kh % snap.n_buckets, kh, joined))
-
-        import bisect
 
         fstats = snap.file_stats or {}
 
@@ -701,25 +722,55 @@ class LakeTable:
             files.extend(
                 rel for rel in snap.buckets.get(b, []) if may_contain(rel, hashes)
             )
-
-        df = self.read(files=files, include_deleted=True, version=version,
-                       resolve_deltas=False)
-        # Pending deltas can hold a newer version of a looked-up key (or
-        # its tombstone): fold the khash-pruned delta files in by the same
-        # guard resolution a logical read uses.
         all_hashes = sorted({w[1] for w in want})
         dfiles = [rel for rel in (snap.deltas or []) if may_contain(rel, all_hashes)]
-        if dfiles:
-            df = resolve_merge_on_read(
-                df, self.delta_rows(version=version, delta_files=dfiles), snap.key_cols
-            )
-        if not include_deleted:
-            df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        joined_expr = F.concat_ws(
-            KEY_SEP,
-            *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in snap.key_cols],
+
+        joined_sql = "concat_ws({}, {})".format(
+            _sql_str(KEY_SEP),
+            ", ".join(f"coalesce(CAST({_sql_ident(c)} AS STRING), '')" for c in snap.key_cols),
         )
-        return df.filter(joined_expr.isin([w[2] for w in want]))
+        joined_list = ", ".join(_sql_str(j) for j in sorted({w[2] for w in want}))
+        key_pred = f"{joined_sql} IN ({joined_list})"
+        if any(f.name == KHASH_COL for f in snap.schema.fields):
+            in_list = ", ".join(str(h) for h in all_hashes)
+            key_pred = f"({KHASH_COL} IS NULL OR {KHASH_COL} IN ({in_list})) AND {key_pred}"
+
+        df = self.read(files=files, include_deleted=True, version=snap.version,
+                       resolve_deltas=False).where(key_pred)
+        # Pending deltas can hold a newer version of a looked-up key (or
+        # its tombstone).
+        if dfiles:
+            delta = self.delta_rows(version=snap.version, delta_files=dfiles).where(key_pred)
+            both = df.selectExpr("*", f"1 AS {GUARD_TIE_COL}").unionByName(
+                delta.selectExpr("*", f"0 AS {GUARD_TIE_COL}")
+            )
+            df = keep_guard_winners(both.coalesce(1), snap.key_cols)
+        if not include_deleted:
+            df = df.where(f"NOT coalesce({DELETED_COL}, false)")
+        return df
+
+
+def keep_guard_winners(df: DataFrame, partition_cols: list[str]) -> DataFrame:
+    """The first row per ``partition_cols`` in GUARD_ORDER_SQL order, with
+    the ``_rn`` rank and GUARD_TIE_COL dropped. Built from one SQL string:
+    ``row_number() == 1`` still plans as a WindowGroupLimit."""
+    by = ", ".join(_sql_ident(c) for c in partition_cols)
+    return (
+        df.selectExpr("*", f"row_number() OVER (PARTITION BY {by} ORDER BY {GUARD_ORDER_SQL}) AS _rn")
+        .where("_rn = 1")
+        .drop("_rn", GUARD_TIE_COL)
+    )
+
+
+def _sql_ident(name: str) -> str:
+    """A column name as a quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(value: str) -> str:
+    """A Python string as a Spark SQL string literal: backslash and quote
+    escaped, every other character verbatim."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def resolve_merge_on_read(base: DataFrame, delta: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -735,25 +786,13 @@ def resolve_merge_on_read(base: DataFrame, delta: DataFrame, key_cols: list[str]
     single pending delta row costs one broadcast anti-join over the scan,
     not a table-wide shuffle.
     """
-    from pyspark.sql import Window
-
     dkeys = delta.select(*key_cols).distinct()
     untouched = base.join(F.broadcast(dkeys), on=key_cols, how="left_anti")
     touched = base.join(F.broadcast(dkeys), on=key_cols, how="left_semi")
-    combined = touched.withColumn("_is_base", F.lit(1)).unionByName(
-        delta.withColumn("_is_base", F.lit(0))
+    combined = touched.withColumn(GUARD_TIE_COL, F.lit(1)).unionByName(
+        delta.withColumn(GUARD_TIE_COL, F.lit(0))
     )
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col("last_offset").desc_nulls_last(),
-        F.coalesce(F.col("last_seq"), F.lit(0)).desc(),
-        F.col("_is_base").desc(),
-    )
-    winners = (
-        combined.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_is_base")
-    )
-    return untouched.unionByName(winners)
+    return untouched.unionByName(keep_guard_winners(combined, key_cols))
 
 
 _STATS_TYPES = (T.LongType, T.IntegerType, T.ShortType, T.ByteType,

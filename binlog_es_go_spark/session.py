@@ -13,6 +13,35 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Default driver heap: a quarter of physical memory, capped at 8g. A JVM
+# shares its host with up to three more (the test session plus the CLI and
+# multi-writer subprocesses it starts), and a fixed 8g pre-touched heap per
+# JVM OOM-killed the test session on a 15 GB host.
+JVMS_PER_HOST = 4
+MAX_HEAP_GB = 8
+
+
+def default_heap(meminfo: str) -> tuple[str, bool]:
+    """(heap size, pre-touch?) for a driver JVM, from ``/proc/meminfo`` text.
+
+    The heap is MemTotal / JVMS_PER_HOST in whole GiB, between 1g and
+    MAX_HEAP_GB. Pre-touching faults the whole heap in at start-up, so it
+    is on only when JVMS_PER_HOST heaps of that size fit in MemAvailable
+    right now. Without both fields (not Linux) the answer is a small heap
+    without pre-touch.
+    """
+    kb = {}
+    for line in meminfo.splitlines():
+        name, _, rest = line.partition(":")
+        if name in ("MemTotal", "MemAvailable") and rest.split():
+            kb[name] = int(rest.split()[0])
+    if len(kb) < 2:
+        return "2g", False
+    gib = 1 << 20  # kB per GiB
+    heap_gb = max(1, min(MAX_HEAP_GB, kb["MemTotal"] // (JVMS_PER_HOST * gib)))
+    return f"{heap_gb}g", heap_gb * gib * JVMS_PER_HOST <= kb["MemAvailable"]
+
+
 def _scratch_dir() -> str:
     for candidate in ("/dev/shm", "/tmp"):
         if os.path.isdir(candidate) and os.access(candidate, os.W_OK):
@@ -34,17 +63,28 @@ def build_session(
     run at two parallelism levels, changes only its task-level concurrency
     — the plan shape stays identical, which is what makes the two-level
     throughput comparison a fair scaling-efficiency measurement.
+
+    The driver heap is ``SPARK_DRIVER_MEM`` (always pre-touched) when set,
+    else sized to the host by :func:`default_heap`.
     """
     cores = parallelism or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = shuffle_partitions or max(cores, 8)
-    mem = os.environ.get("SPARK_DRIVER_MEM", "8g")
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    pretouch = True
+    if not mem:
+        try:
+            with open("/proc/meminfo") as f:
+                mem, pretouch = default_heap(f.read())
+        except OSError:
+            mem, pretouch = default_heap("")
     # Xms=Xmx + AlwaysPreTouch + THP: fault the heap once at startup.
-    # Measured on this sandbox: guest-kernel page-fault serialization makes
-    # concurrent fresh-page allocation collapse (8 workers allocating =
-    # 0.25x the aggregate bandwidth of preallocated copies); pre-touching
+    # Measured on a 32-vCPU guest: guest-kernel page-fault serialization
+    # makes concurrent fresh-page allocation collapse (8 workers allocating
+    # = 0.25x the aggregate bandwidth of preallocated copies); pre-touching
     # the heap removes the dominant fault source and roughly 2.4x'd
     # 32-core MERGE throughput. Harmless on real clusters.
-    java_opts = f"-Xms{mem} -XX:+AlwaysPreTouch -XX:+UseTransparentHugePages"
+    touch = " -XX:+AlwaysPreTouch" if pretouch else ""
+    java_opts = f"-Xms{mem}{touch} -XX:+UseTransparentHugePages"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")

@@ -206,3 +206,135 @@ def test_delta_fold_after_threshold_bounds_debt(spark, tmp_path, log):
     oracle = apply_sequential(_slice(log, 0, 2300).toPandas())
     got = t.read().select("repo", "path", "content").toPandas()
     assert table_digest(got) == table_digest(oracle[["repo", "path", "content"]])
+
+
+# Keys a SQL string literal must carry escaped: quote, backslash, backtick,
+# non-ASCII, and a backslash sequence Spark's parser would otherwise unescape.
+ODD_KEYS = [("o'brien", "a\\b.py"), ("back`tick", "ünï/碼.py"), ("r'\\`", "'"), ("x\\u0041", "\\'y")]
+EV_SCHEMA = (
+    "offset long, partition_id int, seq_in_tx int, op string, repo string, path string, "
+    "before struct<commit:string,lang:string,content:string>, "
+    "after struct<commit:string,lang:string,content:string{}>, ts timestamp"
+)
+
+
+def _odd_events(spark, offset, op, content, size=None):
+    """One event per ODD_KEYS key; ``size`` adds the evolved column."""
+    rows = []
+    for i, (repo, path) in enumerate(ODD_KEYS):
+        after = None if op == "delete" else ("c" * 40, "py", f"{content}-{i}")
+        if after is not None and size is not None:
+            after = (*after, size + i)
+        rows.append((offset + i, 0, 0, op, repo, path, None, after, None))
+    extra = ", size_bytes:long" if size is not None else ""
+    return spark.createDataFrame(rows, EV_SCHEMA.format(extra))
+
+
+def _assert_lookup_equals_read(t, keys):
+    """read_keys == read() filtered to the keys, row for row, both ways."""
+    from collections import Counter
+
+    key_cols = t.snapshot().key_cols
+    want = {tuple(k) if isinstance(k, (tuple, list)) else (k,) for k in keys}
+    for include_deleted in (False, True):
+        full = t.read(include_deleted=include_deleted).collect()
+        cols = full[0].__fields__ if full else None
+        expect = Counter(tuple(r) for r in full if tuple(r[c] for c in key_cols) in want)
+        got = t.read_keys(keys, include_deleted=include_deleted).collect()
+        assert not got or got[0].__fields__ == cols
+        assert Counter(tuple(r) for r in got) == expect, include_deleted
+
+
+def _strip_khash_from_a_file(t, bucket):
+    """Replace one base file of ``bucket`` with a copy that has no
+    ``_khash`` column and no stats — a file written before ``_khash``
+    existed."""
+    import glob
+    import json
+    import os
+
+    snap = t.snapshot()
+    rel = snap.buckets[bucket][0]
+    out = os.path.join(t.root, "data", "legacy")
+    t.spark.read.parquet(os.path.join(t.root, rel)).drop("_khash").coalesce(1).write.parquet(out)
+    [new_rel] = [os.path.relpath(p, t.root) for p in glob.glob(os.path.join(out, "*.parquet"))]
+    mpath = os.path.join(t.root, f"manifest-{snap.version}.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    m["buckets"][str(bucket)][0] = new_rel
+    m["file_stats"].pop(rel, None)
+    m["file_sizes"].pop(rel, None)
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+
+
+def test_read_keys_equals_filtered_read(spark, tmp_path, log):
+    """Across a random sequence of delta appends — deletes, verbatim
+    redelivery, a schema-evolved column, a pre-_khash base file, a fold
+    whose delta drop crashed — a point lookup returns exactly the rows of
+    a full merge-on-read scan for those keys, tombstones included or not."""
+    import random
+    import zlib
+
+    from binlog_es_go_spark.lake.table import KEY_SEP
+
+    rng = random.Random(7)
+    t = fresh(spark, tmp_path)
+    apply_batch(t, _slice(log, 0, 1500).unionByName(_odd_events(spark, 0, "insert", "v0")),
+                batch_id=0, write_mode="rewrite")
+    odd_bucket = zlib.crc32(KEY_SEP.join(ODD_KEYS[0]).encode()) % t.snapshot().n_buckets
+    _strip_khash_from_a_file(t, odd_bucket)
+
+    known = [(r["repo"], r["path"]) for r in t.read(include_deleted=True).select("repo", "path").collect()]
+    keys = rng.sample(known, 30) + ODD_KEYS + [("nope", "x.py")]
+    _assert_lookup_equals_read(t, keys)
+
+    lo, batch = 1500, 1
+    for step in range(6):
+        hi = lo + rng.choice([100, 250, 400])
+        apply_batch(t, _slice(log, lo, hi), batch_id=batch, write_mode="delta")
+        if rng.random() < 0.5:  # verbatim redelivery of the same events
+            apply_batch(t, _slice(log, lo, hi), batch_id=batch + 1, write_mode="delta")
+        odd = ("delete", None) if step == 2 else ("update", None if step < 3 else 1000 * step)
+        apply_batch(t, _odd_events(spark, hi + 10_000 * step, odd[0], f"s{step}", odd[1]),
+                    batch_id=batch + 2, write_mode="delta")
+        lo, batch = hi, batch + 3
+        if step % 2:
+            _assert_lookup_equals_read(t, keys)
+    assert "size_bytes" in t.snapshot().schema.fieldNames()
+
+    # a fold that committed but crashed before dropping its deltas
+    def crash(*_a, **_k):
+        raise RuntimeError("crash between fold and drop")
+
+    pending = list(t.snapshot().deltas)
+    t.drop_deltas = crash
+    with pytest.raises(RuntimeError):
+        compact_deltas(t)
+    del t.drop_deltas
+    assert t.snapshot().deltas == pending
+    _assert_lookup_equals_read(t, keys)
+    apply_batch(t, _odd_events(spark, 900_000, "update", "after-fold"), batch_id=batch,
+                write_mode="delta")
+    _assert_lookup_equals_read(t, keys)
+
+
+def test_read_keys_integer_key_equals_filtered_read(spark, tmp_path):
+    t = LakeTable.create(spark, str(tmp_path / "ints"),
+                         T.StructType([T.StructField("id", T.LongType()), T.StructField("v", T.StringType())]),
+                         key_cols=["id"], n_buckets=4)
+
+    def ev(rows):
+        return spark.createDataFrame(
+            [(off, 0, 0, op, k, None if op == "delete" else (f"v{off}",), None) for off, op, k in rows],
+            "offset long, partition_id int, seq_in_tx int, op string, id long, "
+            "after struct<v:string>, ts timestamp",
+        )
+
+    apply_batch(t, ev([(k, "insert", k) for k in range(200)]), batch_id=0, write_mode="rewrite")
+    apply_batch(t, ev([(1000 + k, "update", k) for k in range(0, 200, 3)]), batch_id=1, write_mode="delta")
+    apply_batch(t, ev([(2000 + k, "delete", k) for k in range(0, 200, 5)]), batch_id=2, write_mode="delta")
+    apply_batch(t, ev([(5, "insert", 5), (7, "insert", 7)]), batch_id=3, write_mode="delta")  # stale
+    keys = [(k,) for k in (0, 3, 5, 7, 10, 11, 199, 500)]
+    _assert_lookup_equals_read(t, keys)
+    assert sorted(r["id"] for r in t.read_keys([3, 5, 7, 500]).collect()) == [3, 7]

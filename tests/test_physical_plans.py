@@ -201,3 +201,41 @@ def test_lsh_index_probe_scan_not_shuffled_whole(spark, tmp_path):
     assert plan.count("BroadcastExchange") >= 2, plan[:1200]
     for marker in ("BatchEvalPython", "ArrowEvalPython", "PythonUDF"):
         assert marker not in plan, f"Python in the probe path: {marker}"
+
+
+def test_point_lookup_with_pending_deltas_is_one_job_no_exchange(spark, tmp_path):
+    """read_keys over base files plus pending deltas: the key predicate
+    reaches both parquet scans as a pushed ``_khash`` filter, the guard
+    window runs on one coalesced partition (no Exchange, no broadcast),
+    and the lookup is exactly one Spark job."""
+    import re
+
+    from pyspark.sql import types as T
+
+    from binlog_es_go_spark.cdc.apply import apply_batch
+    from binlog_es_go_spark.lake.table import LakeTable
+
+    payload = T.StructType([T.StructField(n, T.StringType()) for n in ["repo", "path", "commit", "lang", "content"]])
+    t = LakeTable.create(spark, str(tmp_path / "pk"), payload, key_cols=["repo", "path"], n_buckets=8)
+    log = generate_changelog(spark, 1200, n_repos=10, paths_per_repo=20, seed=3)
+    apply_batch(t, log.filter("offset < 1000"), batch_id=0, write_mode="rewrite")
+    apply_batch(t, log.filter("offset >= 1000 AND offset < 1100"), batch_id=1, write_mode="delta")
+    apply_batch(t, log.filter("offset >= 1100"), batch_id=2, write_mode="delta")
+    assert len(t.snapshot().deltas) == 2
+    keys = [(r["repo"], r["path"]) for r in log.filter("offset >= 1000").select("repo", "path").limit(20).collect()]
+
+    sc = spark.sparkContext
+    group = "point-lookup-plan-test"
+    sc.setJobGroup(group, "read_keys")
+    try:
+        df = t.read_keys(keys)
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    plan = plan_of(df)
+    assert "Exchange" not in plan, plan[:1500]  # also rules out BroadcastExchange
+    final = plan.split("== Initial Plan ==")[0]
+    scans = re.findall(r"PushedFilters: \[([^\]]*)", final)
+    assert len(scans) == 2 and all("_khash" in s for s in scans), scans
